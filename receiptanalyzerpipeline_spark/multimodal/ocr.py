@@ -28,6 +28,7 @@ from typing import Protocol
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from receiptanalyzerpipeline_spark.sources.textract import TEXTRACT_SCHEMA
 
@@ -254,38 +255,40 @@ def ocr_with_cache(
     The anti-join keys on ahash — exactly-once OCR per distinct image
     content, idempotent under replay (SURVEY §7.3.4/§7.3.6)."""
     distinct_imgs = images.select("ahash", "content").dropDuplicates(["ahash"])
-    cache = _read_cache_or_none(spark, cache_path)
+    cache = read_parquet_or_none(spark, cache_path, OCR_RESULT_SCHEMA)
     if cache is None:
         cache = spark.createDataFrame([], OCR_RESULT_SCHEMA)
 
     misses = distinct_imgs.join(cache.select("ahash"), "ahash", "left_anti")
     # Probe MISSES (a plain anti-join) for emptiness, never the OCR output:
     # probing `fresh` would invoke the backend once for the probe and again
-    # for the write — two paid calls per miss. The single `fresh.write` job
-    # below is the only execution of the OCR stage.
+    # for the write — two paid calls per miss. The `write` job below is the
+    # only execution of the OCR stage. The probe, the write and the caller's
+    # reads of the returned frame each re-evaluate `images`, so a caller
+    # that hashes the images persists them first (see
+    # streaming/ingest.py::parsed_batch).
     if misses.limit(1).count() > 0:
         ocr_expense(misses, backend).write.mode("append").parquet(cache_path)
-    cache_now = _read_cache_or_none(spark, cache_path)
+    cache_now = read_parquet_or_none(spark, cache_path, OCR_RESULT_SCHEMA)
     if cache_now is None:  # nothing cached and nothing missed: empty input
         return spark.createDataFrame([], OCR_RESULT_SCHEMA)
     return cache_now.join(distinct_imgs.select("ahash"), "ahash", "left_semi")
 
 
-def _read_cache_or_none(spark: SparkSession, cache_path: str) -> DataFrame | None:
-    """Read the raw-zone cache, returning None ONLY when the path does not
-    exist yet (first run). Any other failure — corrupt files, permission
-    errors, transient FS faults — re-raises: treating those as "nothing
-    cached" would silently drop OCR results."""
+def read_parquet_or_none(
+    spark: SparkSession, path: str, schema: StructType | str
+) -> DataFrame | None:
+    """Read a parquet table with a known schema, returning None ONLY when
+    the path does not exist yet (first run). Any other failure — corrupt
+    files, permission errors, transient FS faults — re-raises: treating
+    those as "no table yet" would silently drop OCR results or re-append
+    curated rows. The explicit schema also spares the footer-inference job
+    an unschematised read launches."""
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(cache_path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as ex:
-        error_class = None
-        try:
-            error_class = ex.getErrorClass()
-        except Exception:
-            pass
-        if error_class == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(ex):
+        if ex.getCondition() == "PATH_NOT_FOUND":
             return None
         raise

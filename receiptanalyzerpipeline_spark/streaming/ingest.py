@@ -19,9 +19,21 @@ Reference → engine mapping (SURVEY §3.2, §2.9):
 The batch transforms are the SAME DataFrame functions proven against the
 DuckDB oracle (flatten/pivot) — Spark's batch/streaming unification means
 the streaming path inherits their correctness.
+
+Each batch is computed once. ``parsed_batch`` persists two frames: the
+distinct ``(ahash, content)`` rows, which the memo probe, the OCR write and
+the raw-zone semi-join all read, and the parsed documents, which both
+merges read. Unpersisted, each of those actions would re-run the aHash UDF
+over the image bytes (a Python task per partition) and re-parse the JSON.
+The cost is memory: one batch's distinct image bytes stay in the block
+manager (spilling to disk past memory) until the batch's last merge
+commits.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +51,7 @@ from receiptanalyzerpipeline_spark.multimodal.ocr import (
     OcrBackend,
     ocr_with_cache,
     parse_ocr_documents,
+    read_parquet_or_none,
 )
 from receiptanalyzerpipeline_spark.sources.textract import (
     extract_line_items,
@@ -105,14 +118,32 @@ def _merge_append_new(batch: DataFrame, target_path: str, key: str) -> None:
 
     Parquet stand-in for MERGE INTO (no Delta in this environment): the
     anti-join on the natural key makes replays no-ops, which together with
-    the checkpoint gives exactly-once *effects* (SURVEY §7.3.6)."""
-    spark = batch.sparkSession
-    try:
-        existing = spark.read.parquet(target_path).select(key)
-    except Exception:
-        existing = None
+    the checkpoint gives exactly-once *effects* (SURVEY §7.3.6). Only a
+    missing target counts as empty; an unreadable one raises rather than
+    re-appending the whole batch."""
+    existing = read_parquet_or_none(
+        batch.sparkSession, target_path, StructType([batch.schema[key]])
+    )
     fresh = batch if existing is None else batch.join(existing, key, "left_anti")
     fresh.write.mode("append").parquet(target_path)
+
+
+@contextmanager
+def parsed_batch(images: DataFrame, raw_zone: str, backend: OcrBackend) -> Iterator[DataFrame]:
+    """hash → memoized OCR → parse, computed once for all the caller's
+    actions: yields the parsed documents of ``images``' distinct aHashes.
+    The distinct hashed images and the documents stay persisted until the
+    block exits."""
+    hashed = with_ahash(images).select("ahash", "content").dropDuplicates(["ahash"]).persist()
+    try:
+        ocr = ocr_with_cache(images.sparkSession, hashed, raw_zone, backend)
+        docs = parse_ocr_documents(ocr).persist()
+        try:
+            yield docs
+        finally:
+            docs.unpersist()
+    finally:
+        hashed.unpersist()
 
 
 def process_receipt_batch(
@@ -123,18 +154,15 @@ def process_receipt_batch(
     backend: OcrBackend,
 ) -> None:
     """One micro-batch: hash → memoized OCR → flatten/pivot → merge."""
-    spark = images.sparkSession
-    hashed = with_ahash(images)
-    ocr = ocr_with_cache(spark, hashed, raw_zone, backend)
-    docs = parse_ocr_documents(ocr)
-    summary = pivot_receipt_summary(flatten_summary_fields(docs))
-    items = extract_line_items(docs)
-    _merge_append_new(summary, curated_summary, "img_id")
-    _merge_append_new(
-        items.withColumn("item_key", F.concat_ws("#", "img_id", "line_no")),
-        curated_items,
-        "item_key",
-    )
+    with parsed_batch(images, raw_zone, backend) as docs:
+        summary = pivot_receipt_summary(flatten_summary_fields(docs))
+        items = extract_line_items(docs)
+        _merge_append_new(summary, curated_summary, "img_id")
+        _merge_append_new(
+            items.withColumn("item_key", F.concat_ws("#", "img_id", "line_no")),
+            curated_items,
+            "item_key",
+        )
 
 
 def run_ingest(

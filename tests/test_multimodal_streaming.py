@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -130,7 +131,6 @@ def test_streaming_ingest_idempotent(spark, stream_dirs):
     assert all(v.startswith("STUB VENDOR ") for v in vendors)
 
 
-@pytest.mark.slow
 def test_ocr_with_cache_single_invocation(spark, tmp_path):
     """Regression (ADVICE r1): the cache probe must not execute the OCR
     stage — each distinct image is analyzed exactly ONCE across repeated
@@ -181,3 +181,133 @@ def test_ocr_with_cache_single_invocation(spark, tmp_path):
     out4 = ocr_with_cache(spark, empty, str(tmp_path / "never_written"), backend)
     assert out4.count() == 0
     assert len(log.read_text().splitlines()) == 3
+
+
+def test_process_receipt_batch_computes_each_batch_once(spark, tmp_path):
+    """Two batches through process_receipt_batch — an in-batch duplicate
+    (a == a2) and a cross-batch re-scan (a3 == a). The curated tables hold
+    one summary row and its line items per distinct aHash, the backend runs
+    once per new aHash, and the upstream ``content`` is evaluated once per
+    input row: the memo probe, the OCR write, the raw-zone semi-join and
+    both merges read one persisted copy of the hashed batch."""
+    from decimal import Decimal
+
+    from receiptanalyzerpipeline_spark.multimodal.images import _ahash_hex
+    from receiptanalyzerpipeline_spark.streaming.ingest import process_receipt_batch
+
+    class _ReceiptBackend:
+        """One line per analyze() call in a shared file; a receipt with a
+        vendor, a total and two line items derived from the aHash."""
+
+        def __init__(self, log_path: str):
+            self.log_path = log_path
+
+        def analyze(self, content: bytes, ahash: str) -> dict:
+            with open(self.log_path, "a") as f:
+                f.write(ahash + "\n")
+
+            def field(kind: str, text: str) -> dict:
+                return {
+                    "PageNumber": 1,
+                    "Type": {"Text": kind, "Confidence": 99.0},
+                    "ValueDetection": {"Text": text, "Confidence": 99.0, "Geometry": None},
+                }
+
+            lines = [
+                [field("ITEM", f"ITEM {ahash[:4]}"), field("PRICE", "2.50"), field("QUANTITY", "2")],
+                [field("ITEM", "BAG"), field("PRICE", "0.10")],
+            ]
+            summary = [field("VENDOR_NAME", f"VENDOR {ahash[:4]}"), field("TOTAL", "$5.10")]
+            return {
+                "img_id": ahash,
+                "ExpenseDocuments": [
+                    {
+                        "ExpenseIndex": 1,
+                        "SummaryFields": summary,
+                        "LineItemGroups": [
+                            {
+                                "LineItemGroupIndex": 1,
+                                "LineItems": [{"LineItemExpenseFields": f} for f in lines],
+                            }
+                        ],
+                    }
+                ],
+            }
+
+    content_log = str(tmp_path / "content.log")
+    ocr_log = tmp_path / "ocr.log"
+
+    def log_rows(content: pd.Series) -> pd.Series:
+        with open(content_log, "a") as f:
+            f.write("row\n" * len(content))
+        return content
+
+    # Nondeterministic, as a file scan is: a deterministic UDF would be
+    # inlined into with_ahash's UDF chain and run twice in one pass.
+    logged = F.pandas_udf(log_rows, "binary").asNondeterministic()
+
+    zones = {k: str(tmp_path / k) for k in ("raw", "summary", "items")}
+    backend = _ReceiptBackend(str(ocr_log))
+
+    def ingest(named: dict[str, bytes]) -> None:
+        images = images_df(spark, named).withColumn("content", logged("content"))
+        process_receipt_batch(images, zones["raw"], zones["summary"], zones["items"], backend)
+
+    def log_lines(path) -> list[str]:
+        return Path(path).read_text().splitlines()
+
+    ingest({"a": IMG_A, "a2": IMG_A2, "c": IMG_C})
+    assert len(log_lines(content_log)) == 3, "content evaluated once per input row"
+    assert sorted(log_lines(ocr_log)) == sorted({_ahash_hex(IMG_A), _ahash_hex(IMG_C)})
+
+    ingest({"a3": IMG_A, "b": IMG_B})
+    assert len(log_lines(content_log)) == 5, "content evaluated once per input row"
+    hashes = {_ahash_hex(img) for img in (IMG_A, IMG_B, IMG_C)}
+    assert sorted(log_lines(ocr_log)) == sorted(hashes), "one OCR call per new distinct aHash"
+
+    summary = (
+        spark.read.parquet(zones["summary"]).select("img_id", "vendor_name", "total").collect()
+    )
+    assert sorted(map(tuple, summary)) == sorted(
+        (h, f"VENDOR {h[:4]}", Decimal("5.10")) for h in hashes
+    )
+    items = (
+        spark.read.parquet(zones["items"])
+        .select("img_id", "line_no", "item_name", "price", "quantity", "item_key")
+        .collect()
+    )
+    assert sorted(map(tuple, items)) == sorted(
+        row
+        for h in hashes
+        for row in (
+            (h, 1, f"ITEM {h[:4]}", Decimal("2.50"), 2, f"{h}#1"),
+            (h, 2, "BAG", Decimal("0.10"), 1, f"{h}#2"),
+        )
+    )
+
+
+def test_merge_treats_only_a_missing_target_as_empty(spark, tmp_path):
+    """A missing curated table is created by the first merge; an unreadable
+    one raises instead of being re-appended to as if it were empty."""
+    import warnings
+
+    from py4j.protocol import Py4JJavaError
+
+    from receiptanalyzerpipeline_spark.multimodal.ocr import read_parquet_or_none
+    from receiptanalyzerpipeline_spark.streaming.ingest import _merge_append_new
+
+    batch = spark.createDataFrame([("k1", 1), ("k2", 2)], "img_id string, v int")
+    target = tmp_path / "summary"
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        assert read_parquet_or_none(spark, str(target), batch.schema) is None
+    _merge_append_new(batch, str(target), "img_id")
+    _merge_append_new(batch, str(target), "img_id")  # replay: no new rows
+    assert spark.read.parquet(str(target)).count() == 2
+
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-00000.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Py4JJavaError):  # the failed read, from the write job
+        _merge_append_new(batch, str(corrupt), "img_id")
+    assert [p.name for p in corrupt.iterdir()] == ["part-00000.parquet"]
