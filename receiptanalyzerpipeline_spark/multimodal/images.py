@@ -26,7 +26,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 STUB_MAGIC = b"STUB8x8:"
 
@@ -135,13 +134,6 @@ def ahash_neardup_pairs(df: DataFrame, id_col: str = "path", max_hamming: int = 
         .distinct()
         .where(F.col("hamming") <= max_hamming)
     )
-
-
-def exact_dedup_by_ahash(df: DataFrame, order_col: str = "path") -> DataFrame:
-    """Keep one survivor per aHash — the reference's rename-collision
-    semantics (anarcptlib.py:155-159) as a deterministic window op."""
-    w = Window.partitionBy("ahash").orderBy(F.col(order_col))
-    return df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn")
 
 
 def with_thumbnail(df: DataFrame, size: int = 8, content_col: str = "content") -> DataFrame:

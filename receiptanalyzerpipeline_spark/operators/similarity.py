@@ -87,19 +87,10 @@ N_PLANES = 4  # per table: 16 buckets — coarse partitions, decent recall
 N_TABLES = 4  # independent hash tables; candidates = union of bucket hits
 
 
-def hyperplane_sign(plane: Column, dim: Column) -> Column:
-    """±1 coefficient for (plane, dim), from md5 hex parity — the same
-    expression is replayable in any engine with md5."""
-    hex_digit = F.substring(
-        F.md5(F.concat(plane.cast("string"), F.lit(":"), dim.cast("string"))), 1, 1
-    )
-    return (F.conv(hex_digit, 16, 10).cast("int") % 2) * 2 - 1
-
-
 def _sign(plane: int, dim: int) -> float:
-    """Driver-side value of hyperplane_sign: md5 of the identical string
-    the SQL expression hashes, first hex digit's parity → ±1. Oracles
-    keep recomputing md5 in SQL; this is the same number precomputed."""
+    """±1 coefficient for (plane, dim): the parity of the first hex digit
+    of md5("plane:dim"). Oracles recompute the same md5 in SQL; here it is
+    precomputed on the driver."""
     import hashlib
 
     h = hashlib.md5(f"{plane}:{dim}".encode()).hexdigest()[0]
@@ -518,19 +509,13 @@ def hard_negative_pairs(
     """
     if n_planes is None:
         n_planes = auto_n_planes(corpus.count())
-    # Shuffle the signature stream by its join/window key ONCE: both the
-    # anchor side and the capped negative side below derive from this
-    # exchange, so at runtime the second consumer is a ReusedExchange and
-    # the plane dots are computed once per corpus row (r11; previously
-    # the anchor side's join exchange re-evaluated the whole signature
-    # subtree — guide §2.1, the minhash-rewrite pattern).
     sig = corpus.select(
         F.col(id_col).alias("vid"),
         F.col(label_col).alias("lbl"),
         F.explode(
             lsh_table_buckets(F.col(vec_col), n_planes=n_planes, dims=dims)
         ).alias("tb"),
-    ).repartition("tb")
+    )
     a = sig.select(
         F.col("vid").alias("anchor_id"), F.col("lbl").alias("anchor_label"), "tb"
     )
@@ -560,114 +545,3 @@ def hard_negative_pairs(
     w = Window.partitionBy("anchor_id").orderBy(F.col("sim").desc(), F.col("neg_id"))
     return pairs.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
-
-def lsh_multiprobe_recall_params(
-    n: int,
-    recall_target: float = 0.9,
-    sim_floor: float = 0.8,
-    max_tables: int = 64,
-    occupancy: int = TARGET_BUCKET_OCCUPANCY,
-) -> tuple[int, int]:
-    """(n_planes, n_tables) for MULTI-PROBE LSH at a recall target.
-
-    The round-6 recall table exposed plain OR-construction's cost: 45
-    tables x 13 planes = 585 plane dots per CORPUS vector to hold 0.9
-    recall at a 0.8 floor on 200 k vectors (~129 s). Multi-probe (Lv et
-    al., VLDB 2007) also visits the probe bucket's Hamming-1 neighbors
-    — flipping the least-confident plane bits — so a table "hits" when
-    the neighbor agrees on ALL planes or on all-but-one:
-
-        q = p^b + b * p^(b-1) * (1 - p),   p = 1 - arccos(s)/pi
-
-    and T = ceil(log(1-target) / log(1-q)). The extra probing work lands
-    on the PROBE side (probes x tables x (b+1) buckets — probes are few)
-    while the corpus side, which dominates at scale, shrinks by the
-    table reduction (13 planes at 200 k: q = 0.221 vs p^b = 0.051 →
-    10 tables instead of 45, 4.5x less corpus bucketing + explode)."""
-    import math
-
-    n_planes = auto_n_planes(n, target=occupancy)
-    p = 1.0 - math.acos(max(-1.0, min(1.0, sim_floor))) / math.pi
-    q = p**n_planes + n_planes * p ** (n_planes - 1) * (1.0 - p)
-    if q >= 1.0 - 1e-12:
-        return n_planes, 1
-    need = math.log(max(1e-12, 1.0 - recall_target)) / math.log(1.0 - q)
-    return n_planes, max(1, min(max_tables, math.ceil(need)))
-
-
-def multiprobe_table_buckets(
-    vec_col: Column,
-    n_planes: int = N_PLANES,
-    n_tables: int = N_TABLES,
-    dims: int = EMBED_DIMS,
-) -> Column:
-    """Probe-side bucket set: for every table, the exact bucket PLUS its
-    ``n_planes`` Hamming-1 neighbors (each single plane bit flipped) —
-    array<struct<tbl,bucket>> of (n_planes+1) x n_tables entries. The
-    corpus side keeps indexing ONE bucket per table
-    (``lsh_table_buckets``); only probes fan out, so multi-probe moves
-    the recall cost from corpus x tables to probes x tables."""
-    v = as_double(vec_col)
-    out = []
-    for t in range(n_tables):
-        bucket = F.lit(0)
-        for p in range(n_planes):
-            bucket = bucket + F.when(
-                _plane_dot(v, t * n_planes + p, dims) > 0, F.lit(1 << p)
-            ).otherwise(0)
-        out.append(F.struct(F.lit(t).alias("tbl"), bucket.alias("bucket")))
-        for p in range(n_planes):
-            flipped = (
-                bucket.bitwiseXOR(F.lit(1 << p))
-            )
-            out.append(F.struct(F.lit(t).alias("tbl"), flipped.alias("bucket")))
-    return F.array(*out)
-
-
-def lsh_multiprobe_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id: str = "q_id",
-    probe_vec: str = "q_emb",
-    n_planes: int = N_PLANES,
-    n_tables: int = N_TABLES,
-    dims: int = EMBED_DIMS,
-) -> DataFrame:
-    """Approximate top-k with Hamming-1 multi-probe: candidates are
-    corpus vectors whose table bucket matches the probe's bucket OR any
-    single-bit flip of it, in >= 1 table. Same contract as
-    ``lsh_bucketed_topk`` with fewer tables for the same recall
-    (``lsh_multiprobe_recall_params``)."""
-    bucketed = corpus.select(
-        id_col,
-        vec_col,
-        F.explode(
-            lsh_table_buckets(F.col(vec_col), n_planes=n_planes, n_tables=n_tables, dims=dims)
-        ).alias("tb"),
-    )
-    probes_b = F.broadcast(
-        probes.select(
-            probe_id,
-            probe_vec,
-            F.explode(
-                multiprobe_table_buckets(
-                    F.col(probe_vec), n_planes=n_planes, n_tables=n_tables, dims=dims
-                )
-            ).alias("q_tb"),
-        )
-    )
-    cands = (
-        bucketed.join(
-            probes_b, (F.col("tb") == F.col("q_tb")) & (F.col(probe_id) != F.col(id_col))
-        )
-        .select(probe_id, probe_vec, id_col, vec_col)
-        .distinct()  # a pair may collide in several tables/probe buckets
-    )
-    pairs = cands.select(
-        probe_id, id_col, cosine(F.col(probe_vec), F.col(vec_col)).alias("sim")
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.col("sim").desc(), F.col(id_col))
-    return pairs.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)

@@ -435,7 +435,7 @@ def q_t7(spark: SparkSession, sf_dir: str) -> DataFrame:
         "One shuffle on user_id + in-partition sort — the standard way a "
         "warehouse derives slowly-changing dimensions from a 100 TB "
         "change stream (and the batch shape of the streaming upsert sink "
-        "sources/sinks.upsert_by_key)."
+        "sources/snapshots.merge_upsert)."
     ),
     tags=("events", "window", "dimension"),
 )

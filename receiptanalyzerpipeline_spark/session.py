@@ -59,9 +59,9 @@ def get_spark(
         # Arrow collect batch size: r10 raised this 10k -> 256k claiming
         # fewer slices cut q_er2's 5.5 M-row warm collect 10-20%, but the
         # driver's r10 bench moved the OTHER way (0.60 -> 0.69 s) and the
-        # r11 A/B (scripts/er2_arrow_ab.py: 12 order-rotated rounds on
-        # the prepared q_er2 collect) confirms the driver: best-of-reps
-        # 0.64 s @10k vs 0.77 @64k vs 0.87 @256k, medians within noise.
+        # r11 A/B (12 order-rotated rounds on the prepared q_er2 collect)
+        # confirms the driver: best-of-reps 0.64 s @10k vs 0.77 @64k vs
+        # 0.87 @256k, medians within noise.
         # Small batches pipeline the executor->driver transfer; big ones
         # make it bursty. Reverted to the Spark default (10k), stated
         # explicitly so the next tuning round finds the A/B history.
@@ -81,11 +81,6 @@ def get_spark(
         # application scan >= 10 GB) are cluster-appropriate and left
         # alone; tests/test_plan_shapes.py lowers them to prove injection.
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        # Python DataSource filter pushdown (Spark 4.1): lets the receipts
-        # landing-zone source (sources/receipt_datasource.py) prune files at
-        # driver-side LISTING time from img_id/path predicates — the custom-
-        # source equivalent of partition pruning.
-        "spark.sql.python.filterPushdown.enabled": "true",
         # Local-mode memory hygiene; harmless on a cluster where the
         # submitter overrides these.
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
@@ -116,7 +111,4 @@ def prepare_session(spark: SparkSession) -> SparkSession:
       erroring — no silent value change for non-nano data.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Runtime-settable; needed whenever the receipts Python DataSource is
-    # mounted on an externally-built session (it implements pushFilters).
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     return spark

@@ -25,7 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def write_partitioned_by_month(
@@ -48,12 +47,6 @@ def write_partitioned_by_hash_prefix(
     the physical form of the reference's rename-to-hash layout."""
     with_prefix = df.withColumn("hash_prefix", F.substring(F.col(hash_col), 1, 2))
     with_prefix.write.partitionBy("hash_prefix").mode(mode).parquet(path)
-
-
-def append_evolving(df: DataFrame, path: str) -> None:
-    """Schema-evolution-safe append (K3): new columns may appear in later
-    writes; readers see the union via read_evolved."""
-    df.write.mode("append").parquet(path)
 
 
 _DROP_MASK = "_dropped_columns.json"
@@ -145,72 +138,6 @@ def write_bucketed(
     w.saveAsTable(name)
 
 
-def upsert_by_key(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    key_cols: list[str],
-    version_col: str,
-) -> None:
-    """MERGE-style upsert into a parquet target without a table format:
-    union target + updates, keep the max-``version_col`` row per key,
-    rewrite. Equivalent to ``MERGE WHEN MATCHED UPDATE WHEN NOT MATCHED
-    INSERT`` with last-writer-wins.
-
-    Scale posture: the rewrite is the cost — at 100 TB this targets ONE
-    partition at a time (pair with ``write_partitioned_by_month``'s layout
-    and dynamic partition overwrite) or moves to a table format with
-    file-level merge (Delta/Iceberg), which keeps this exact dedup
-    semantics but rewrites only touched files. The keep-latest dedup is
-    one hash shuffle on the key; ties on version break by the remaining
-    columns (deterministic under retry).
-    """
-    import os
-
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col(version_col).desc(),
-        *[F.col(c).desc() for c in updates.columns if c not in key_cols and c != version_col],
-    )
-    if os.path.exists(path):
-        current = spark.read.parquet(path)
-        merged = current.unionByName(updates.select(*current.columns))
-    else:
-        merged = updates
-    result = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    # Parquet sources can't overwrite in place from a plan that reads the
-    # same path — materialize through a staging dir, then swap.
-    staging = f"{path}.__staging__"
-    result.write.mode("overwrite").parquet(staging)
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    os.replace(staging, path)
-
-
-def compact(spark: SparkSession, path: str, target_files: int = 1) -> int:
-    """Small-file compaction: rewrite a parquet dataset into
-    ``target_files`` files (coalesce — a repartition-less merge; no
-    shuffle). Streaming sinks and per-trigger appends accrete small files
-    that degrade scan parallelism bookkeeping at scale; compaction is the
-    standing housekeeping job. Returns the file count before compaction.
-    """
-    import glob as _glob
-    import os
-    import shutil
-
-    before = len(_glob.glob(os.path.join(path, "*.parquet")))
-    df = spark.read.parquet(path)
-    staging = f"{path}.__staging__"
-    df.coalesce(target_files).write.mode("overwrite").parquet(staging)
-    shutil.rmtree(path, ignore_errors=True)
-    os.replace(staging, path)
-    return before
-
-
 def write_training_shards(
     df: DataFrame,
     path: str,
@@ -286,6 +213,12 @@ def zorder_frame(
     EVERY clustered column. Returns ``df`` unchanged when the input is
     empty or a cluster column is all-NULL (no bounds to bucketize over).
 
+    A sort on one column gives perfect parquet min/max skipping on that
+    column and none on any other; interleaving the bucketized bits of k
+    columns gives useful skipping on every clustered column at once — the
+    layout ``compact_snapshot(cluster_by=...)`` writes for tables probed by
+    more than one key (SURVEY N7 layout policy, Delta OPTIMIZE ZORDER).
+
     Each cluster column is mapped into 2^bits equal-width cells with
     ``width_bucket`` over its [min, max] (one 2-scalar agg fetch per
     column — never a per-row collect; heavy value skew would call for
@@ -340,22 +273,3 @@ def zorder_frame(
         .sortWithinPartitions("__z__")
         .drop("__z__")
     )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 16,
-    bits: int = 16,
-) -> None:
-    """Z-order clustered writer: multi-dimensional data skipping without
-    partitioning (SURVEY N7 layout policy, Delta OPTIMIZE ZORDER shape).
-
-    A sort on one column gives perfect parquet min/max skipping on that
-    column and none on any other; interleaving the bucketized bits of k
-    columns gives useful skipping on EVERY clustered column at once — the
-    layout for 100 TB fact tables probed by more than one key. See
-    ``zorder_frame`` for the mechanics.
-    """
-    zorder_frame(df, cols, n_files, bits).write.mode("overwrite").parquet(path)

@@ -90,8 +90,6 @@ def main() -> None:
     from receiptanalyzerpipeline_spark.operators.similarity import (
         brute_force_topk,
         lsh_bucketed_topk,
-        lsh_multiprobe_recall_params,
-        lsh_multiprobe_topk,
         lsh_recall_params,
     )
 
@@ -129,21 +127,6 @@ def main() -> None:
         print(json.dumps({
             "scale": scale, "n": n, "method": "lsh",
             "params": {"n_planes": planes, "n_tables": tables},
-            "recall@k": round(recall_at_k(got, truth, args.k), 4),
-            "search_s": round(time.time() - t0, 2),
-        }), flush=True)
-
-        # Multi-probe LSH: Hamming-1 probing buys tables back (round 7).
-        mp_planes, mp_tables = lsh_multiprobe_recall_params(
-            n, recall_target=0.9, sim_floor=0.8
-        )
-        t0 = time.time()
-        got = lsh_multiprobe_topk(
-            corpus, probes, k=args.k, n_planes=mp_planes, n_tables=mp_tables, dims=dim
-        ).collect()
-        print(json.dumps({
-            "scale": scale, "n": n, "method": "lsh_multiprobe",
-            "params": {"n_planes": mp_planes, "n_tables": mp_tables},
             "recall@k": round(recall_at_k(got, truth, args.k), 4),
             "search_s": round(time.time() - t0, 2),
         }), flush=True)

@@ -164,49 +164,3 @@ def test_calibrate_shortlist_meets_target_and_is_minimal(spark):
         }
         assert len(got & truth) / len(truth) < 0.9
 
-
-def test_multiprobe_params_need_fewer_tables_and_bound_holds():
-    from receiptanalyzerpipeline_spark.operators.similarity import (
-        lsh_multiprobe_recall_params,
-    )
-
-    planes, tables = lsh_recall_params(200_000, recall_target=0.9, sim_floor=0.8)
-    mp_planes, mp_tables = lsh_multiprobe_recall_params(
-        200_000, recall_target=0.9, sim_floor=0.8
-    )
-    assert mp_planes == planes  # occupancy side unchanged
-    assert mp_tables < tables  # the point: Hamming-1 probing buys tables back
-    # The per-table hit bound itself: q = p^b + b p^(b-1)(1-p).
-    p = 1 - math.acos(0.8) / math.pi
-    q = p**mp_planes + mp_planes * p ** (mp_planes - 1) * (1 - p)
-    assert 1 - (1 - q) ** mp_tables >= 0.9
-
-
-def test_multiprobe_recall_on_planted_neighbors(spark):
-    """Same harness as the plain-LSH planted test: derived multi-probe
-    params must retrieve the 0.95-cosine anchor for >= 85% of probes,
-    and multi-probe at IDENTICAL (planes, tables) can only see MORE
-    candidates than exact-bucket probing."""
-    from receiptanalyzerpipeline_spark.operators.similarity import (
-        lsh_multiprobe_recall_params,
-        lsh_multiprobe_topk,
-    )
-
-    n, planted = 400, 40
-    corpus = _corpus(spark, n=n, planted_pairs=planted, sim=0.95)
-    planes, tables = lsh_multiprobe_recall_params(n, recall_target=0.9, sim_floor=0.9)
-    probes = (
-        corpus.where(f"vec_id >= {n - planted}")
-        .selectExpr("vec_id AS q_id", "embedding AS q_emb")
-    )
-    got = lsh_multiprobe_topk(
-        corpus, probes, k=1, n_planes=planes, n_tables=tables
-    ).collect()
-    hits = sum(1 for r in got if r["vec_id"] == r["q_id"] - (n - planted))
-    assert hits / planted >= 0.85, f"recall {hits}/{planted} with {planes=} {tables=}"
-
-    # Superset property at matched params (fewer tables than the plain
-    # derivation would use, so plain misses more).
-    plain = lsh_bucketed_topk(corpus, probes, k=1, n_planes=planes, n_tables=tables).collect()
-    plain_hits = sum(1 for r in plain if r["vec_id"] == r["q_id"] - (n - planted))
-    assert hits >= plain_hits

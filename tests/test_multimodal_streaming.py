@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from receiptanalyzerpipeline_spark.multimodal.images import (
     STUB_MAGIC,
     ahash_neardup_pairs,
-    exact_dedup_by_ahash,
     with_ahash,
 )
 
@@ -52,7 +51,7 @@ def test_ahash_properties(spark):
 
 
 @pytest.mark.slow
-def test_ahash_neardup_and_exact_dedup(spark):
+def test_ahash_neardup_pairs(spark):
     df = with_ahash(images_df(spark, {"a": IMG_A, "a2": IMG_A2, "b": IMG_B, "c": IMG_C}))
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
@@ -62,9 +61,6 @@ def test_ahash_neardup_and_exact_dedup(spark):
     assert pairs[("a", "b")] == 1
     assert pairs[("a2", "b")] == 1
     assert not any("c" in k for k in pairs), "checkerboard is not a near-dup"
-
-    survivors = {r["path"] for r in exact_dedup_by_ahash(df).collect()}
-    assert survivors == {"a", "b", "c"}  # a2 collides with a; lowest path wins
 
 
 @pytest.fixture()
@@ -94,7 +90,6 @@ def _summary_count(spark, d) -> int:
     return spark.read.parquet(d["summary"]).count()
 
 
-@pytest.mark.slow
 def test_streaming_ingest_idempotent(spark, stream_dirs):
     d = stream_dirs
     landing = Path(d["landing"])

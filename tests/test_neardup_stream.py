@@ -1,6 +1,7 @@
-"""Streaming near-dup dedup (streaming/neardup_stream.py): persisted LSH
-bucket state, in-batch keep-min clustering, corpus-probe drops, and
-exactly-once replay across both state tables."""
+"""Streaming near-dup dedup (``curate-stream --near-dedup``, built from
+streaming/neardup_stream.py): persisted LSH bucket state, in-batch
+keep-min clustering, corpus-probe drops, exactly-once replay across the
+state tables, and the MinHash family guard on persisted state."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from receiptanalyzerpipeline_spark.sources import snapshots as snap
-from receiptanalyzerpipeline_spark.streaming.neardup_stream import neardup_dedup_sink
 
 BASE_A = (
     "the quick brown fox jumps over the lazy dog while the curious cat "
@@ -30,79 +30,11 @@ DISTINCT_D = (
 )
 
 
-def _run(spark, landing, corpus, buckets, cp):
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-    )
-    q = (
-        stream.writeStream.foreachBatch(neardup_dedup_sink(corpus, buckets))
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout=300)
-
-
 def test_streaming_neardup_corpus_stays_deduped(spark, tmp_path):
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    corpus, buckets = str(tmp_path / "corpus"), str(tmp_path / "buckets")
-
-    # Batch 0: two distinct docs — both survive.
-    # Batch 1: near-dup of A (vs corpus), new doc C, and an in-batch
-    #          near-dup pair (C, C') where C has the smaller id.
-    batches = [
-        [(1, BASE_A), (2, DISTINCT_B)],
-        [
-            (10, BASE_A + " with one extra trailing clause appended here"),
-            (11, BASE_C),
-            (12, BASE_C + " plus a small appended suffix for this twin"),
-        ],
-    ]
-    for i, rows in enumerate(batches):
-        with open(landing / f"f{i}.json", "w") as f:
-            for doc_id, text in rows:
-                f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-
-    _run(spark, landing, corpus, buckets, str(tmp_path / "cp1"))
-    kept = {r["doc_id"] for r in snap.read_snapshot(spark, corpus).collect()}
-    assert kept == {1, 2, 11}  # 10 dropped vs corpus; 12 dropped in-batch
-
-    # Bucket state covers exactly the survivors.
-    state_ids = {
-        r["doc_id"]
-        for r in snap.read_snapshot(spark, buckets).select("doc_id").collect()
-    }
-    assert state_ids == {1, 2, 11}
-
-    # Batch 2 after a restart: another near-dup of A (dropped against the
-    # PERSISTED state, not the live stream) and a genuinely new doc.
-    with open(landing / "f2.json", "w") as f:
-        f.write(json.dumps({"doc_id": 20, "text": BASE_A + " again slightly longer"}) + "\n")
-        f.write(json.dumps({"doc_id": 21, "text": DISTINCT_D}) + "\n")
-    _run(spark, landing, corpus, buckets, str(tmp_path / "cp1"))
-    kept = {r["doc_id"] for r in snap.read_snapshot(spark, corpus).collect()}
-    assert kept == {1, 2, 11, 21}
-
-    # Fresh checkpoint: full replay is a no-op for BOTH state tables
-    # (batch-id ledgers), deterministic batches via maxFilesPerTrigger=1.
-    v_c, v_b = snap.current_version(corpus), snap.current_version(buckets)
-    _run(spark, landing, corpus, buckets, str(tmp_path / "cp2"))
-    assert snap.current_version(corpus) == v_c
-    assert snap.current_version(buckets) == v_b
-    assert {r["doc_id"] for r in snap.read_snapshot(spark, corpus).collect()} == {
-        1, 2, 11, 21,
-    }
-
-
-@pytest.mark.slow
-def test_streaming_curation_with_near_dedup(spark, tmp_path):
     """curate-stream --near-dedup: the curation loop drops near-dups both
     in-batch (keep-first) and against the persisted TEXT-FREE LSH state
-    (band buckets + signatures, MinHash-estimator verified), exactly-once
-    under full replay."""
+    (band buckets + signatures, MinHash-estimator verified), also after a
+    restart, and is exactly-once under full replay."""
     from receiptanalyzerpipeline_spark.streaming.curation_stream import (
         read_shard_membership,
         run_streaming_curation,
@@ -116,10 +48,14 @@ def test_streaming_curation_with_near_dedup(spark, tmp_path):
         (11, BASE_C),
         (12, BASE_C + " plus a small appended suffix for this twin"),
     ]
-    for i, rows in enumerate((rows0, rows1)):
+
+    def land(i: int, rows) -> None:
         spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(
             str(landing / f"b{i}"), mode="overwrite"
         )
+
+    land(0, rows0)
+    land(1, rows1)
 
     snapshot = str(tmp_path / "state")
     shards = str(tmp_path / "shards")
@@ -144,6 +80,13 @@ def test_streaming_curation_with_near_dedup(spark, tmp_path):
     sigs = snap.read_snapshot(spark, snapshot + "_lshs")
     assert set(sigs.columns) == {"doc_id", "sig"}
     assert {r["doc_id"] for r in sigs.collect()} == {1, 2, 11}
+
+    # After a restart: another near-dup of A (dropped against the
+    # PERSISTED state, not the live stream) and a genuinely new doc.
+    land(2, [(20, BASE_A + " again slightly longer"), (21, DISTINCT_D)])
+    run(str(tmp_path / "cp1"))
+    kept = {r["doc_id"] for r in read_shard_membership(spark, shards).collect()}
+    assert kept == {1, 2, 11, 21}
 
     # Full replay from a fresh checkpoint: all three state tables no-op.
     vs = [
@@ -348,28 +291,45 @@ def test_neardup_probe_plan_is_equi_join(spark):
     assert "Join" in plan
 
 
-
 def test_minhash_family_stamp_guards_persisted_state(spark, tmp_path):
     """ADVICE r10: LSH state manifests carry the signature hash family;
-    a sink built by an engine with a different (or unknown) family must
-    refuse to probe the state instead of silently missing every
-    near-dup against the pre-existing corpus."""
+    a near-dedup curation stream started by an engine with a different
+    (or unknown) family must refuse to probe the state instead of
+    silently missing every near-dup against the pre-existing corpus."""
     from receiptanalyzerpipeline_spark.operators.dedup import MINHASH_FAMILY
+    from receiptanalyzerpipeline_spark.streaming.curation_stream import (
+        run_streaming_curation,
+    )
     from receiptanalyzerpipeline_spark.streaming.neardup_stream import (
         check_minhash_family,
         stamped_minhash_family,
     )
 
     landing = tmp_path / "landing"
-    landing.mkdir()
-    corpus, buckets = str(tmp_path / "corpus"), str(tmp_path / "buckets")
-    with open(landing / "f0.json", "w") as f:
-        f.write(json.dumps({"doc_id": 1, "text": BASE_A}) + "\n")
-    _run(spark, landing, corpus, buckets, str(tmp_path / "cp1"))
+    spark.createDataFrame([(1, BASE_A)], "doc_id long, text string").coalesce(1).write.parquet(
+        str(landing / "b0")
+    )
+    snapshot = str(tmp_path / "state")
+    buckets, sigs = snapshot + "_lshb", snapshot + "_lshs"
 
-    # Writes stamp the current family; a same-family restart constructs.
+    def start():
+        q = run_streaming_curation(
+            spark,
+            str(landing) + "/b*",
+            snapshot_path=snapshot,
+            shards_path=str(tmp_path / "shards"),
+            checkpoint=str(tmp_path / "cp"),
+            schema="doc_id long, text string",
+            near_dedup=True,
+        )
+        q.awaitTermination(timeout=300)
+
+    start()
+
+    # Writes stamp the current family; a same-family restart runs.
     assert stamped_minhash_family(buckets) == MINHASH_FAMILY
-    neardup_dedup_sink(corpus, buckets)  # no raise
+    assert stamped_minhash_family(sigs) == MINHASH_FAMILY
+    start()  # no raise
 
     # Tamper the stamp to simulate state written by another family.
     v = snap.current_version(buckets)
@@ -378,7 +338,7 @@ def test_minhash_family_stamp_guards_persisted_state(spark, tmp_path):
     m["minhash_family"] = "md5-conv-v1"
     mpath.write_text(json.dumps(m))
     with pytest.raises(ValueError, match="md5-conv-v1"):
-        neardup_dedup_sink(corpus, buckets)
+        start()
     with pytest.raises(ValueError, match="hash family"):
         check_minhash_family(buckets)
 
@@ -387,9 +347,9 @@ def test_minhash_family_stamp_guards_persisted_state(spark, tmp_path):
     del m["minhash_family"]
     mpath.write_text(json.dumps(m))
     with pytest.raises(ValueError, match="pre-stamp"):
-        neardup_dedup_sink(corpus, buckets)
+        start()
 
     # Restore and confirm the guard passes again.
     m["minhash_family"] = MINHASH_FAMILY
     mpath.write_text(json.dumps(m))
-    neardup_dedup_sink(corpus, buckets)
+    start()

@@ -387,11 +387,11 @@ def test_q_x28_bm25_prunes_tokens_before_shuffle(spark, registry):
 
 
 def test_session_arrow_batch_sizing(spark):
-    # r11 A/B REVERSAL of the r10 256k bump (scripts/er2_arrow_ab.py,
-    # 12 order-rotated rounds on q_er2's prepared 5.5M-row collect):
-    # best-of-reps 0.64 s @10k vs 0.77 @64k vs 0.87 @256k — small
-    # batches pipeline the executor->driver transfer; big ones make it
-    # bursty, and the driver's r10 bench regression agreed. Frozen at
-    # the Spark default so a future "fewer batches = faster" edit must
-    # re-run the A/B first (see session.py for the full history).
+    # r11 A/B REVERSAL of the r10 256k bump (12 order-rotated rounds on
+    # q_er2's prepared 5.5M-row collect): best-of-reps 0.64 s @10k vs
+    # 0.77 @64k vs 0.87 @256k — small batches pipeline the
+    # executor->driver transfer; big ones make it bursty, and the
+    # driver's r10 bench regression agreed. Frozen at the Spark default
+    # so a future "fewer batches = faster" edit must re-run an A/B first
+    # (see session.py for the full history).
     assert spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "10000"

@@ -49,15 +49,15 @@ def test_hash_prefix_layout(spark, tmp_path: Path):
 def test_schema_evolution_append(spark, tmp_path: Path):
     """K3: the other_data migration — a later write adds a column; evolved
     reads see the union schema with NULLs for old rows."""
-    from receiptanalyzerpipeline_spark.sources.sinks import append_evolving, read_evolved
+    from receiptanalyzerpipeline_spark.sources.sinks import read_evolved
 
     out = str(tmp_path / "evolving")
     v1 = spark.createDataFrame([("r1", "CVS")], ["img_id", "vendor_name"])
-    append_evolving(v1, out)
+    v1.write.mode("append").parquet(out)
     v2 = spark.createDataFrame(
         [("r2", "CAFE", '{"CHANGE":"0.55"}')], ["img_id", "vendor_name", "other_data"]
     )
-    append_evolving(v2, out)
+    v2.write.mode("append").parquet(out)
 
     evolved = read_evolved(spark, out)
     assert set(evolved.columns) == {"img_id", "vendor_name", "other_data"}
@@ -93,39 +93,6 @@ def test_approx_distinct_tolerance(spark, sf_dir):
     )
     assert abs(approx["approx_parts"] - exact["n_parts"]) / exact["n_parts"] < 0.05
     assert abs(approx["approx_supps"] - exact["n_supps"]) / exact["n_supps"] < 0.05
-
-
-def test_upsert_by_key_last_writer_wins(spark, tmp_path):
-    from receiptanalyzerpipeline_spark.sources.sinks import upsert_by_key
-
-    path = str(tmp_path / "target")
-    base = spark.createDataFrame(
-        [(1, 1, "a"), (2, 1, "b")], "k long, version long, payload string"
-    )
-    upsert_by_key(spark, base, path, ["k"], "version")
-    upd = spark.createDataFrame(
-        [(2, 2, "b2"), (3, 1, "c")], "k long, version long, payload string"
-    )
-    upsert_by_key(spark, upd, path, ["k"], "version")
-    got = {(r["k"], r["version"], r["payload"]) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, 1, "a"), (2, 2, "b2"), (3, 1, "c")}
-    # Stale update must NOT clobber a newer row.
-    stale = spark.createDataFrame([(2, 1, "old")], "k long, version long, payload string")
-    upsert_by_key(spark, stale, path, ["k"], "version")
-    got = {(r["k"], r["payload"]) for r in spark.read.parquet(path).collect()}
-    assert (2, "b2") in got and (2, "old") not in got
-
-
-def test_compact_merges_small_files(spark, tmp_path):
-    from receiptanalyzerpipeline_spark.sources.sinks import compact
-    import glob
-
-    path = str(tmp_path / "many")
-    spark.range(1000).repartition(16).write.parquet(path)
-    before = compact(spark, path, target_files=2)
-    assert before == 16
-    assert len(glob.glob(path + "/*.parquet")) == 2
-    assert spark.read.parquet(path).count() == 1000
 
 
 def test_permissive_json_quarantines_corrupt_rows(spark, tmp_path):
@@ -185,45 +152,6 @@ def test_write_jdbc_roundtrip_embedded_derby(spark, tmp_path):
     ]
 
 
-def test_upsert_by_key_last_writer_wins_and_idempotent(spark, tmp_path):
-    from receiptanalyzerpipeline_spark.sources.sinks import upsert_by_key
-
-    path = str(tmp_path / "curated")
-    base = spark.createDataFrame(
-        [("a", 1, "v1"), ("b", 1, "v1")], "img_id string, version int, payload string"
-    )
-    upsert_by_key(spark, base, path, key_cols=["img_id"], version_col="version")
-
-    updates = spark.createDataFrame(
-        [("a", 2, "v2"), ("c", 1, "v1")], "img_id string, version int, payload string"
-    )
-    upsert_by_key(spark, updates, path, key_cols=["img_id"], version_col="version")
-    rows = {r["img_id"]: (r["version"], r["payload"])
-            for r in spark.read.parquet(path).collect()}
-    assert rows == {"a": (2, "v2"), "b": (1, "v1"), "c": (1, "v1")}
-
-    # Replaying the same update batch must not change anything (idempotent
-    # under retry - the MERGE contract).
-    upsert_by_key(spark, updates, path, key_cols=["img_id"], version_col="version")
-    rows2 = {r["img_id"]: (r["version"], r["payload"])
-             for r in spark.read.parquet(path).collect()}
-    assert rows2 == rows
-
-
-def test_compact_merges_small_files(spark, tmp_path):
-    import glob
-
-    from receiptanalyzerpipeline_spark.sources.sinks import compact
-
-    path = str(tmp_path / "smallfiles")
-    spark.range(0, 1000).repartition(8).write.parquet(path)
-    before = compact(spark, path, target_files=1)
-    assert before >= 8
-    after = glob.glob(f"{path}/*.parquet")
-    assert len(after) == 1
-    assert spark.read.parquet(path).count() == 1000
-
-
 def _files_matching_point(spark, path: str, col: str, probes: list) -> float:
     """Mean #files whose [min,max] envelope admits each probe value —
     the count a min/max-pruning scan planner would have to read."""
@@ -239,18 +167,18 @@ def _files_matching_point(spark, path: str, col: str, probes: list) -> float:
 
 
 def test_zorder_layout_skips_on_both_columns(spark, tmp_path):
-    """write_zordered: one layout, min/max skipping on BOTH cluster columns.
+    """zorder_frame: one layout, min/max skipping on BOTH cluster columns.
     The linear sort baseline skips perfectly on its sort column and not at
     all on the other; z-order must beat it decisively on the second column
     while keeping real pruning on the first."""
-    from receiptanalyzerpipeline_spark.sources.sinks import write_zordered
+    from receiptanalyzerpipeline_spark.sources.sinks import zorder_frame
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_extendedprice"
     )
     n_files = 16
     zpath, lpath = str(tmp_path / "zorder"), str(tmp_path / "linear")
-    write_zordered(li, zpath, ["l_orderkey", "l_partkey"], n_files=n_files)
+    zorder_frame(li, ["l_orderkey", "l_partkey"], n_files=n_files).write.parquet(zpath)
     (
         li.repartitionByRange(n_files, "l_orderkey")
         .sortWithinPartitions("l_orderkey")
@@ -283,10 +211,10 @@ def test_zorder_layout_skips_on_both_columns(spark, tmp_path):
 
 
 def test_zorder_degenerate_inputs(spark, tmp_path):
-    """write_zordered must not fail on empty input or constant cluster
-    columns: empty → write as-is; constant column → pinned cell 0 (the
+    """zorder_frame must not fail on empty input or constant cluster
+    columns: empty → returned as-is; constant column → pinned cell 0 (the
     column contributes nothing to the z-value instead of corrupting it)."""
-    from receiptanalyzerpipeline_spark.sources.sinks import write_zordered
+    from receiptanalyzerpipeline_spark.sources.sinks import zorder_frame
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
         "l_orderkey", "l_partkey"
@@ -294,12 +222,12 @@ def test_zorder_degenerate_inputs(spark, tmp_path):
 
     empty = li.limit(0)
     epath = str(tmp_path / "empty")
-    write_zordered(empty, epath, ["l_orderkey", "l_partkey"], n_files=4)
+    zorder_frame(empty, ["l_orderkey", "l_partkey"], n_files=4).write.parquet(epath)
     assert spark.read.parquet(epath).count() == 0
 
     const = li.withColumn("l_partkey", F.lit(7))
     cpath = str(tmp_path / "const")
-    write_zordered(const, cpath, ["l_orderkey", "l_partkey"], n_files=4)
+    zorder_frame(const, ["l_orderkey", "l_partkey"], n_files=4).write.parquet(cpath)
     out = spark.read.parquet(cpath)
     assert out.count() == li.count()
     # The non-constant column still clusters: each file's envelope is narrow.
@@ -596,7 +524,6 @@ def test_schema_evolution_drop_and_undrop_column(spark, tmp_path):
     downgrade): drop_columns masks a column out of read_evolved without
     rewriting data; undrop_columns restores it (bytes still present)."""
     from receiptanalyzerpipeline_spark.sources.sinks import (
-        append_evolving,
         drop_columns,
         read_evolved,
         undrop_columns,
@@ -604,7 +531,7 @@ def test_schema_evolution_drop_and_undrop_column(spark, tmp_path):
 
     out = str(tmp_path / "tbl")
     v1 = spark.range(3).selectExpr("id", "CAST(id AS STRING) AS extra")
-    append_evolving(v1, out)
+    v1.write.mode("append").parquet(out)
     assert set(read_evolved(spark, out).columns) == {"id", "extra"}
 
     drop_columns(out, "extra")
@@ -613,7 +540,7 @@ def test_schema_evolution_drop_and_undrop_column(spark, tmp_path):
     assert dropped.count() == 3
 
     # appends after the drop keep working; the mask still applies
-    append_evolving(spark.range(3, 5).selectExpr("id", "'x' AS extra"), out)
+    spark.range(3, 5).selectExpr("id", "'x' AS extra").write.mode("append").parquet(out)
     assert read_evolved(spark, out).columns == ["id"]
     assert read_evolved(spark, out).count() == 5
 
